@@ -57,9 +57,10 @@ object SparkEntry {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** documents with synthetic duplicates planted (doc_id < 50 duplicated
-    * with shifted ids) so dedup operators have real work.
+    * with shifted ids) so dedup operators have real work; doc_id stays a
+    * key (the copies' ids are shifted by 100000).
     */
-  private def docsWithDups(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def docsWithDups(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir, "documents")
     d.select(col("doc_id"), col("text"))
       .unionAll(d.filter(col("doc_id") < 50)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftshim.SqlShim
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.kernel.Magic
 
@@ -92,6 +93,23 @@ package object functions {
     * final values are bit-identical (pinned by a property test).
     */
   def text_stats(c: Column): Column = SqlShim.column(TextStats(SqlShim.expression(c)))
+
+  /** MinHash signature of a row's string array (non-null elements):
+    * sig[i] = min over its elements s of pmod(a(i) * pmod(h64(s), p) + b(i), p),
+    * the values one min() per hash gives over the exploded array. Null
+    * for a null or empty array.
+    */
+  def minhash(arr: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
+    SqlShim.column(MinHashSig(SqlShim.expression(arr), a, b, p))
+
+  /** 60-bit SimHash of a row's string array: bit b is set when more
+    * non-empty elements have bit b of h64 set than clear (a repeated
+    * element votes again). Null when no element is non-empty.
+    */
+  def simhash(arr: Column): Column = SqlShim.column(SimHash(SqlShim.expression(arr)))
+
+  /** h64 of every element of a string array (non-null elements). */
+  def h64s(arr: Column): Column = SqlShim.column(H64s(SqlShim.expression(arr)))
 }
 
 package functions {
@@ -248,6 +266,47 @@ package functions {
         Array[Any](text.numChars(), toks.length, punct, stops, lenSum))
     }
 
+    /** See [[functions.minhash]]. h64 >= 0 and a(i) * h + b(i) < 2^63
+      * for a, b, h < p = 2^31-1, so `%` is pmod here.
+      */
+    def minhash(arr: ArrayData, a: Array[Long], b: Array[Long], p: Long): ArrayData = {
+      if (arr.numElements() == 0) return null
+      val sig = Array.fill(a.length)(Long.MaxValue)
+      var j = 0
+      while (j < arr.numElements()) {
+        val h = h64(arr.getUTF8String(j)) % p
+        var i = 0
+        while (i < sig.length) { sig(i) = math.min(sig(i), (a(i) * h + b(i)) % p); i += 1 }
+        j += 1
+      }
+      new GenericArrayData(sig)
+    }
+
+    /** See [[functions.simhash]]; -1, which no 60-bit signature can be,
+      * when no element is non-empty.
+      */
+    def simhash(arr: ArrayData): Long = {
+      val votes = new Array[Int](60)
+      var any = false
+      var j = 0
+      while (j < arr.numElements()) {
+        if (!arr.isNullAt(j) && arr.getUTF8String(j).numBytes() > 0) {
+          any = true
+          val h = h64(arr.getUTF8String(j))
+          var b = 0
+          while (b < 60) { votes(b) += ((h >>> b).toInt & 1) * 2 - 1; b += 1 }
+        }
+        j += 1
+      }
+      var sig = 0L
+      var b = 0
+      while (b < 60) { if (votes(b) > 0) sig |= 1L << b; b += 1 }
+      if (any) sig else -1L
+    }
+
+    def h64s(arr: ArrayData): ArrayData =
+      new GenericArrayData(Array.tabulate(arr.numElements())(j => h64(arr.getUTF8String(j))))
+
     def dotF64(a: org.apache.spark.sql.catalyst.util.ArrayData,
         b: org.apache.spark.sql.catalyst.util.ArrayData,
         aFloat: Boolean, bFloat: Boolean): Double = {
@@ -385,6 +444,47 @@ $arrayData ${ev.value} = $fn(${c.isNull} ? null : ${c.value}, $n, $distinct);"""
         s"graft.functions.Kernels$$.MODULE$$.lshSigs($c, $elemIsFloat, $nTables, $nBits, $dims, ${seed}L)")
     override protected def withNewChildInternal(c: Expression): LshSigs =
       copy(child = c)
+  }
+
+  /** See [[functions.minhash]]. */
+  case class MinHashSig(child: Expression, a: Seq[Long], b: Seq[Long], p: Long)
+      extends UnaryExpression {
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = true
+    override def nullSafeEval(v: Any): Any =
+      Kernels.minhash(v.asInstanceOf[ArrayData], a.toArray, b.toArray, p)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ra = ctx.addReferenceObj("hashA", a.toArray, "long[]")
+      val rb = ctx.addReferenceObj("hashB", b.toArray, "long[]")
+      nullSafeCodeGen(ctx, ev, c => s"""
+        ${ev.value} = graft.functions.Kernels$$.MODULE$$.minhash($c, $ra, $rb, ${p}L);
+        ${ev.isNull} = ${ev.value} == null;""")
+    }
+    override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
+  }
+
+  /** See [[functions.simhash]]. */
+  case class SimHash(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = LongType
+    override def nullable: Boolean = true
+    override def nullSafeEval(v: Any): Any = {
+      val sig = Kernels.simhash(v.asInstanceOf[ArrayData])
+      if (sig < 0) null else sig
+    }
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c => s"""
+        ${ev.value} = graft.functions.Kernels$$.MODULE$$.simhash($c);
+        ${ev.isNull} = ${ev.value} < 0L;""")
+    override protected def withNewChildInternal(c: Expression): SimHash = copy(c)
+  }
+
+  /** See [[functions.h64s]]. */
+  case class H64s(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullSafeEval(v: Any): Any = Kernels.h64s(v.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"graft.functions.Kernels$$.MODULE$$.h64s($c)")
+    override protected def withNewChildInternal(c: Expression): H64s = copy(c)
   }
 
   case class LangOf(child: Expression) extends UnaryExpression {

@@ -50,6 +50,9 @@ object JpegDecoder {
       * <= 8; 0 = no such code (fall back to the exact bit-by-bit walk).
       * Pure lookup acceleration of the same canonical decode — the
       * decoded (symbol, consumed-bits) pair is identical by construction.
+      * An oversubscribed DHT table (e.g. three 1-bit codes) assigns codes
+      * >= 2^l that no l-bit prefix can match; the bit walk never returns
+      * them, so they are skipped here too.
       */
     val lut = new Array[Int](256)
     locally {
@@ -57,7 +60,7 @@ object JpegDecoder {
       while (l <= 8) {
         if (maxCode(l) >= 0) {
           var code = minCode(l)
-          while (code <= maxCode(l)) {
+          while (code <= maxCode(l) && code < (1 << l)) {
             val sym = symbol(valPtr(l) + code - minCode(l))
             if (sym >= 0) {
               val base = code << (8 - l)
@@ -77,11 +80,12 @@ object JpegDecoder {
     * bulk-loads runs of PLAIN (non-0xFF) bytes; 0xFF bytes (stuffing or a
     * real marker) are always handled one at a time by the exact slow path,
     * so marker detection, stuffing and end-of-data behave bit-for-bit like
-    * the original per-byte reader — and because the accumulator never
-    * holds a stuffed byte, the logical byte position is recoverable as
-    * pos - nAcc/8 (used by restart()). `pos` may run ahead of the
-    * consumed bits by buffered PLAIN bytes only, so forward marker scans
-    * from `pos` find the same next marker.
+    * the original per-byte reader. A stuffed 0xFF is pushed only when the
+    * buffered bits fall short of the read in progress, which then consumes
+    * part of it, so the WHOLE bytes left in the accumulator are always
+    * plain: the logical byte position is pos - nAcc/8 exactly (used by
+    * restart()), and forward marker scans from `pos` find the same next
+    * marker.
     */
   private final class BitReader(bytes: Array[Byte], var pos: Int) {
     var acc = 0L

@@ -23,7 +23,7 @@ object Curation {
       when(col(strataCol) === k, lit(v)).otherwise(acc)
     }
     docs
-      .withColumn("bucket", pmod(Dedup.h64(
+      .withColumn("bucket", pmod(graft.functions.h64(
         concat_ws(":", col(strataCol), col(idCol))), lit(1000000L)))
       .filter(col("bucket") < (rate * 1000000.0).cast("long"))
       .select(col(idCol), col(strataCol), col("bucket"))

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracles can mirror them exactly (shared hash primitive:
   * bigint of the first 15 hex chars of md5).
   *
-  * Scale notes: every operator is a hash-partitioned groupBy/join on keys
+  * Scale notes: per-doc signatures (MinHash, SimHash) are folded within
+  * the doc's own row, so no exchange undoes a token explode; every
+  * pairing step is a hash-partitioned groupBy/join on keys
   * that are uniform by construction (md5-derived), so the shuffles have no
   * planner-visible skew; LSH banding turns the quadratic near-dup search
   * into an equi-join on band keys (the only scalable shape at 10^12 docs —
@@ -26,24 +28,9 @@ object Dedup {
   val HashA: IndexedSeq[Long] = (0 until NumHashes).map(i => ((2L * i + 1) * 2654435761L) % P)
   val HashB: IndexedSeq[Long] = (0 until NumHashes).map(i => (i.toLong * 40503L + 2531011L) % P)
 
-  /** bigint hash of a string column: first 15 hex chars of md5 — native
-    * one-call expression (thread-local digest, no hex-string round trip;
-    * see functions.h64). Bit-identical to the conv(substring(md5)) chain.
-    */
-  def h64(c: Column): Column = graft.functions.h64(c)
-
   // lower via UTF8String (functions.lower_u8): Catalyst lower() routes
   // through ICU whose one-time init stalls the first 32-task stage
   def tokens(text: Column): Column = split(graft.functions.lower_u8(text), " ")
-
-  /** 3-word shingles (whole text when shorter). Native codegen expression:
-    * the previous transform(sequence(..), j => concat_ws(slice(split(..))))
-    * form was interpreted (HOFs are CodegenFallback) and re-evaluated
-    * split(lower(text)) once per OUTPUT shingle — O(tokens x shingles)
-    * per document. ShinglesExpr tokenizes once (same UTF8String
-    * lower/split/concatWs calls, bit-identical output, property-tested).
-    */
-  def shingles(text: Column): Column = graft.functions.shingles(text, 3)
 
   /** Exact dedup: group identical texts by content hash.
     * Output: (text_hash, n_docs, representative = min doc_id, doc_ids).
@@ -57,37 +44,27 @@ object Dedup {
       .filter(col("n_docs") > 1)
       .orderBy("text_hash")
 
-  /** Per-doc MinHash signature (NumHashes values). */
-  def minhashSignature(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sh = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
-      explode(shingles(col(textCol))).as("sh"))
-      .withColumn("h", pmod(h64(col("sh")), lit(P)))
-    val aggs = (0 until NumHashes).map { i =>
-      min(pmod(lit(HashA(i)) * col("h") + lit(HashB(i)), lit(P))).as(s"m$i")
-    }
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
   /** MinHash + LSH banding + exact-Jaccard verification.
     * Output: (doc_a, doc_b, jaccard) for verified pairs >= threshold.
+    * `idCol` must be a key: each row's signature is folded from its own
+    * 3-word shingles (functions.minhash), so rows sharing an id stay apart.
     */
   def minhashLsh(docs: DataFrame, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sig = minhashSignature(docs, idCol, textCol)
-    // bands via a single explode over one signature subtree (a union of
-    // per-band selects would recompute the signature aggregation per band)
+    val sig = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+      graft.functions.minhash(graft.functions.shingles(col(textCol), 3), HashA, HashB, P).as("sig"))
+    // bands via a single explode over one signature projection (a union
+    // of per-band selects would recompute the signature per band)
     val bandStructs = (0 until Bands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col(s"m${b * RowsPerBand + r}"))
+      val cols = (0 until RowsPerBand).map(r => col("sig").getItem(b * RowsPerBand + r))
       struct(lit(b).as("band"), md5(concat_ws(",", cols: _*)).as("bkey"))
     }
     val bands = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // the self-join's two sides shuffle identically on (band, bkey) =>
-    // Spark's ReuseExchange materializes the subtree once when shuffled;
-    // at bench scale the planner broadcasts one side — the rebuilt band
-    // projection is an agg over the reused Exchange(doc_id), so the md5
-    // shingle pass still runs once (verified in the r7 plan captures)
-    val cand = bands.as("x").join(bands.as("y"),
+    // shuffle_hash pins both sides to the identical Exchange(band, bkey),
+    // which runs once and is reused: the signature is computed once per
+    // doc (a broadcast side would recompute it)
+    val cand = bands.as("x").hint("shuffle_hash").join(bands.as("y").hint("shuffle_hash"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -97,7 +74,8 @@ object Dedup {
     // left join back onto cand is needed)
     val shs = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
       explode(graft.functions.shingles_distinct(col(textCol), 3)).as("sh"))
-    val counts = shs.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val counts = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+      size(graft.functions.shingles_distinct(col(textCol), 3)).cast("bigint").as("n"))
     val inter = cand
       .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(shs.as("sb"), col("doc_b") === col("sb.doc_id") && col("sa.sh") === col("sb.sh"))
@@ -136,17 +114,18 @@ object Dedup {
     }
   }
 
-  /** Per-doc SimHash signatures, unsorted (building block). */
-  def simhashSigs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
-      explode(tokens(col(textCol))).as("t"))
-      .filter(col("t") =!= "")
-      .withColumn("h", h64(col("t"))) // 60-bit value: bits 0..59 meaningful
-    // native TypedImperativeAggregate: one shuffle of 240-byte vote
-    // buffers per doc instead of exploding 60 bit rows per token
-    tok.groupBy("doc_id")
-      .agg(graft.functions.SimHashAgg.simhash_agg(col("h")).as("simhash"))
-  }
+  /** Per-doc SimHash signatures, unsorted (building block), folded from
+    * each doc's tokens within its own row (functions.simhash). Docs
+    * without a non-empty token have no signature and are left out.
+    * `idCol` must be a key.
+    */
+  def simhashSigs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    // the null signatures are dropped by an explode, not a filter: the
+    // optimizer would push a filter on the signature below the spread
+    // exchange and compute the signature there a second time
+    Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+        graft.functions.simhash(tokens(col(textCol))).as("sig"))
+      .select(col("doc_id"), explode(array_compact(array(col("sig")))).as("simhash"))
 
   /** 60-bit SimHash per doc (token-frequency weighted bit voting).
     * Output: (doc_id, simhash).
@@ -176,12 +155,9 @@ object Dedup {
         explode(array(blockStructs: _*)).as("bb"))
       .select(col("doc_id"), col("simhash"),
         col("bb.bi").as("bi"), col("bb.bv").as("bv"))
-    // both sides shuffle identically on (bi, bv) => ReuseExchange when
-    // the planner shuffles; at bench scale it broadcasts one side, which
-    // measured FASTER than a pinned shuffle_hash (the signature table is
-    // one short row per doc — rebuild is an agg over the reused
-    // Exchange(doc_id), cheaper than two extra exchange barriers)
-    val cand = blk.as("x").join(blk.as("y"),
+    // shuffle_hash pins both sides to the identical Exchange(bi, bv),
+    // which runs once and is reused: each doc is hashed once
+    val cand = blk.as("x").hint("shuffle_hash").join(blk.as("y").hint("shuffle_hash"),
         col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),

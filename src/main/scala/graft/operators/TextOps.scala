@@ -63,20 +63,17 @@ object TextOps {
       graft.functions.lang_of(col(textCol)).as("lang_pred"))
       .orderBy("doc_id")
 
-  /** Document fingerprint: min/max/count over hashed 4-word shingles —
-    * a winnowing-style content signature that survives reordering-free
-    * edits and is cheap to compare at scale.
+  /** Document fingerprint: min/max/count/distinct count over hashed
+    * 4-word shingles — a winnowing-style content signature that survives
+    * reordering-free edits and is cheap to compare at scale. Each doc's
+    * shingles are hashed once within its own row (functions.h64s), so
+    * `idCol` must be a key.
     */
-  def fingerprint(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // native codegen 4-gram shingles (see Dedup.shingles: the HOF form
-    // re-split the text once per output shingle, O(tokens x shingles))
-    val sh = graft.functions.shingles(col(textCol), 4)
-    Par.spread(docs, idCol).select(col(idCol).as("doc_id"), explode(sh).as("s"))
-      .withColumn("h", Dedup.h64(col("s")))
-      .groupBy("doc_id")
-      .agg(min(col("h")).as("fp_min"), max(col("h")).as("fp_max"),
-        count(lit(1)).as("n_shingles"),
-        countDistinct(col("h")).as("n_distinct"))
+  def fingerprint(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+        graft.functions.h64s(graft.functions.shingles(col(textCol), 4)).as("hs"))
+      .select(col("doc_id"), array_min(col("hs")).as("fp_min"), array_max(col("hs")).as("fp_max"),
+        size(col("hs")).cast("bigint").as("n_shingles"),
+        size(array_distinct(col("hs"))).cast("bigint").as("n_distinct"))
       .orderBy("doc_id")
-  }
 }

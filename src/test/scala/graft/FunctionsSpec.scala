@@ -61,7 +61,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("shingles: bit-identical to the HOF transform/slice form (incl. null/empty/unicode)") {
     import spark.implicits._
-    // the exact expression ShinglesExpr replaced (Dedup.shingles /
+    // the exact expression ShinglesExpr replaced (the minhash shingles /
     // TextOps.fingerprint before r7): re-evaluates split per shingle
     def hofShingles(text: org.apache.spark.sql.Column, n: Int) = {
       val toks = split(lower(text), " ")
@@ -180,6 +180,75 @@ class FunctionsSpec extends AnyFunSuite {
       .select(oldQ(col("t")).as("o"), newQ(col("t")).as("n")).collect()
     rows.zip(texts).foreach { case (r, t) =>
       assert(r.getStruct(0) == r.getStruct(1), s"'$t'")
+    }
+  }
+
+  test("minhash / simhash / fingerprint: per-row folds equal the explode -> groupBy forms") {
+    import spark.implicits._
+    import graft.operators.{Dedup, TextOps}
+    import graft.functions.Kernels
+    import org.apache.spark.unsafe.types.UTF8String
+    // two distinct tokens disagree on some h64 bit, whose vote is then 0
+    assert(Kernels.h64(UTF8String.fromString("alpha")) !=
+      Kernels.h64(UTF8String.fromString("beta")))
+    val rng = new java.util.Random(19)
+    val words = Seq("the", "Fox", "a", "", "Über", "12", "ß", "x\ty", "alpha", "beta")
+    val texts: Seq[String] =
+      Seq(null, "", " ", "   ", "one", "one one one", "alpha beta", "alpha  beta ",
+        "a b a b a b a", "The the THE fox", "a b c d e f g") ++
+      (0 until 300).map(_ => (0 until rng.nextInt(14))
+        .map(_ => words(rng.nextInt(words.size))).mkString(" "))
+    val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // an RDD-backed frame runs the generated code; a local Seq is folded
+    // by the optimizer through the interpreted eval path
+    for (docs <- Seq(spark.sparkContext.parallelize(rows, 3).toDF("doc_id", "text"),
+        rows.toDF("doc_id", "text"))) {
+      val text = col("text")
+
+      // minhash: NumHashes min() aggregates over the exploded shingles
+      val sh3 = graft.functions.shingles(text, 3)
+      val h = docs.select(col("doc_id"), explode(sh3).as("sh"))
+        .withColumn("h", pmod(graft.functions.h64(col("sh")), lit(Dedup.P)))
+      val mins = (0 until Dedup.NumHashes).map { i =>
+        min(pmod(lit(Dedup.HashA(i)) * col("h") + lit(Dedup.HashB(i)), lit(Dedup.P))).as(s"m$i")
+      }
+      val mhRef = h.groupBy("doc_id").agg(mins.head, mins.tail: _*).collect()
+        .map(r => r.getLong(0) -> (1 to Dedup.NumHashes).map(r.getLong)).toMap
+      val mhNew = docs.select(col("doc_id"),
+          graft.functions.minhash(sh3, Dedup.HashA, Dedup.HashB, Dedup.P)).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      assert(mhNew == mhRef)
+
+      // simhash: per-(doc, bit) vote sums over the non-empty tokens, then
+      // bits with a positive vote (the DuckDB oracle's formulation)
+      val votes = docs.select(col("doc_id"), explode(Dedup.tokens(text)).as("t"))
+        .filter(col("t") =!= "")
+        .select(col("doc_id"), graft.functions.h64(col("t")).as("h"),
+          explode(sequence(lit(0), lit(59))).as("b"))
+        .groupBy("doc_id", "b")
+        .agg(sum(expr("CASE WHEN (shiftrightunsigned(h, b) & 1) = 1 THEN 1 ELSE -1 END")).as("v"))
+      val shRef = votes.groupBy("doc_id")
+        .agg(sum(expr("CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), b) ELSE 0L END")).as("s"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val sigs = Dedup.simhashSigs(docs)
+      assert(!sigs.schema("simhash").nullable)
+      assert(sigs.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == shRef)
+      val dropped = docs.select(col("doc_id"),
+          graft.functions.simhash(Dedup.tokens(text)).as("s"))
+        .filter(col("s").isNull).collect().map(_.getLong(0)).toSet
+      assert(dropped == rows.map(_._1).toSet -- shRef.keySet)
+      assert(dropped.size >= 4) // null, "", " ", "   "
+
+      // fingerprint: min / max / count / count(distinct) over hashed 4-shingles
+      val fpRef = docs.select(col("doc_id"), explode(graft.functions.shingles(text, 4)).as("s"))
+        .withColumn("h", graft.functions.h64(col("s")))
+        .groupBy("doc_id")
+        .agg(min(col("h")).as("fp_min"), max(col("h")).as("fp_max"),
+          count(lit(1)).as("n_shingles"), countDistinct(col("h")).as("n_distinct"))
+        .orderBy("doc_id")
+      val fpNew = TextOps.fingerprint(docs)
+      assert(fpNew.schema == fpRef.schema)
+      assert(fpNew.collect().toSeq == fpRef.collect().toSeq)
     }
   }
 

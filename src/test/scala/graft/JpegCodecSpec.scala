@@ -191,6 +191,25 @@ class JpegCodecSpec extends AnyFunSuite {
     succeed
   }
 
+  test("oversubscribed DHT tables (three 1-bit codes) decode like the bit walk") {
+    // one 8x8 gray block: DC code '0' (size 0) then AC code '0' (EOB);
+    // both tables assign codes 0, 1, 2 at length 1, so code 2 can never
+    // match a 1-bit prefix and must not index the 8-bit lookup table
+    def seg(marker: Int, body: Int*): Seq[Int] =
+      Seq(0xff, marker, (body.length + 2) >> 8, (body.length + 2) & 0xff) ++ body
+    val oversubscribed = 3 +: Seq.fill(15)(0)
+    val bytes = (Seq(0xff, 0xd8) ++
+      seg(0xdb, 0 +: Seq.fill(64)(1): _*) ++
+      seg(0xc0, 8, 0, 8, 0, 8, 1, 1, 0x11, 0) ++
+      seg(0xc4, (0x00 +: oversubscribed) ++ Seq(0, 1, 2): _*) ++
+      seg(0xc4, (0x10 +: oversubscribed) ++ Seq(0x00, 0x01, 0x11): _*) ++
+      seg(0xda, 1, 1, 0x00, 0, 63, 0) ++
+      Seq(0x3f, 0xff, 0xd9)).map(_.toByte).toArray
+    val img = JpegDecoder.decode(bytes).getOrElse(fail("oversubscribed tables: no image"))
+    assert(img.width == 8 && img.height == 8)
+    assert(img.data.forall(b => (b & 0xff) == 128))
+  }
+
   test("sparse-aware IDCT is bit-identical to the dense reference sum") {
     // dense reference: the pre-r7 1024-term separable sum, verbatim
     val CosRef = Array.tabulate(8, 8) { (u, x) =>

@@ -81,6 +81,56 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.forall(_.getInt(2) <= 3))     // maxHamming contract
   }
 
+  test("signature paths: no doc_id-keyed aggregate, each signature computed in one stage") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import graft.functions.{H64s, MinHashSig, SimHash}
+    import graft.operators.{Dedup, TextOps}
+    // the executed plan cut at its exchanges, one node list per stage; a
+    // reused exchange reads an earlier stage's output and adds no nodes,
+    // a cached relation's plan counts as stages of its own
+    def stages(p: SparkPlan): Seq[Seq[SparkPlan]] = {
+      def walk(p: SparkPlan): (Seq[SparkPlan], Seq[Seq[SparkPlan]]) = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case _: ReusedExchangeExec => (Nil, Nil)
+        case m: InMemoryTableScanExec => // an earlier query cached this plan
+          val (own, done) = walk(m.relation.cachedPlan)
+          (Nil, own +: done)
+        case e: Exchange =>
+          val (own, done) = walk(e.child)
+          (Nil, own +: done)
+        case _ =>
+          val parts = p.children.map(walk)
+          (p +: parts.flatMap(_._1), parts.flatMap(_._2))
+      }
+      val (own, done) = walk(p)
+      own +: done
+    }
+    val docs = SparkEntry.docsWithDups(spark, sf)
+    val paths: Seq[(String, DataFrame, Expression => Boolean)] = Seq(
+      ("minhashLsh", Dedup.minhashLsh(docs, 0.5), _.isInstanceOf[MinHashSig]),
+      ("simhashPairs", Dedup.simhashPairs(docs), _.isInstanceOf[SimHash]),
+      ("simhash", Dedup.simhash(docs), _.isInstanceOf[SimHash]),
+      ("fingerprint", TextOps.fingerprint(docs), _.isInstanceOf[H64s]))
+    for ((name, df, isSig) <- paths) {
+      assert(df.collect().nonEmpty, name)
+      val st = stages(df.queryExecution.executedPlan)
+      val docAggs = st.flatten.collect {
+        case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("doc_id") => a
+      }
+      assert(docAggs.isEmpty, s"$name aggregates on doc_id: ${docAggs.mkString("; ")}")
+      val sigStages = st.count(_.exists(_.expressions.exists(_.exists(isSig))))
+      assert(sigStages == 1, s"$name evaluates its signature in $sigStages stages:\n" +
+        df.queryExecution.executedPlan)
+    }
+  }
+
   test("embedCosineGated: recall 1.0 on planted exact dups, subset of exact") {
     import graft.operators.Dedup
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
