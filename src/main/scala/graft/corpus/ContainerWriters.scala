@@ -3,7 +3,7 @@ package graft.corpus
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.SplittableRandom
-import java.util.zip.{GZIPOutputStream, ZipEntry, ZipOutputStream}
+import java.util.zip.{GZIPOutputStream, ZipOutputStream}
 
 /** Round-3 corpus writers: RFC-822 email, zip/tar.gz archive bundles, and
   * refined-subtype text (CSV/TSV/Markdown/XML/Python) — each with
@@ -150,13 +150,11 @@ object ArchiveWriter {
     val out = new ByteArrayOutputStream()
     val zos = new ZipOutputStream(out)
     members.foreach { case (name, bytes) =>
-      val e = new ZipEntry(name)
       // fixed mod-time => byte-deterministic archives (the un-set entry
       // time is wall-clock: it made ~0.5% of media payloads differ
       // between corpus regenerations, breaking the Gen.build purity
       // contract and regen-stability of byte-checksum queries)
-      e.setTime(1595526399000L)
-      zos.putNextEntry(e)
+      zos.putNextEntry(FixedTimeEntry(name))
       zos.write(bytes)
       zos.closeEntry()
     }

@@ -144,8 +144,7 @@ object DocxWriter {
     // fixed time keeps bytes deterministic across runs/JVMs.
     def add(name: String, data: String, stored: Boolean = false): Unit = {
       val bytes = data.getBytes(StandardCharsets.UTF_8)
-      val e = new ZipEntry(name)
-      e.setTime(1595526399000L)
+      val e = FixedTimeEntry(name)
       if (stored) {
         e.setMethod(ZipEntry.STORED)
         e.setSize(bytes.length)

@@ -2,7 +2,23 @@ package graft.corpus
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
+import java.time.LocalDateTime
 import java.util.zip.{CRC32, ZipEntry, ZipOutputStream}
+
+/** Zip entries with a fixed mod-time, so archives are byte-deterministic.
+  * `setTimeLocal` stores the DOS date/time fields as given; `setTime`
+  * would convert an instant through the JVM's default time zone, making
+  * the bytes depend on the host's zone.
+  */
+private[corpus] object FixedTimeEntry {
+  val Time: LocalDateTime = LocalDateTime.of(2020, 7, 23, 17, 46, 39)
+
+  def apply(name: String): ZipEntry = {
+    val e = new ZipEntry(name)
+    e.setTimeLocal(Time)
+    e
+  }
+}
 
 /** Shared deterministic zip assembly for the OOXML corpus writers. */
 private[corpus] object OoxmlZip {
@@ -11,8 +27,7 @@ private[corpus] object OoxmlZip {
     val zip = new ZipOutputStream(out)
     entries.zipWithIndex.foreach { case ((name, data), idx) =>
       val bytes = data.getBytes(StandardCharsets.UTF_8)
-      val e = new ZipEntry(name)
-      e.setTime(1595526399000L) // fixed time => byte-deterministic
+      val e = FixedTimeEntry(name)
       if (idx == 0) {
         // STORED first entry so the magic-sniff front window sees names
         e.setMethod(ZipEntry.STORED)

@@ -138,9 +138,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(s3.docsProcessed == 0)
     // lineage columns present
     assert(all.columns.contains("part_id") && all.columns.contains("run_id"))
-    // metrics table exists with per-partition rows
+    // metrics: per-partition rows summing to each run's own docs; the
+    // nothing-to-do run adds none
+    assert(s1.docsProcessed + s2.docsProcessed == 400)
     val m = IcebergLite.readAll(spark, Runner.metricsDir(outDir)).get
-    assert(m.select("run_id").distinct().count() >= 2)
+    val perRun = m.groupBy("run_id")
+      .agg(sum("docs"), count(lit(1)), countDistinct("part_id")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(perRun.keySet == Set("run-1", "run-2"))
+    assert(perRun("run-1")._1 == s1.docsProcessed && perRun("run-2")._1 == s2.docsProcessed)
+    assert(perRun.values.forall(r => r._2 == r._3)) // one row per partition
   }
 
   test("resume semi-join gate: phase 2 extracts ONLY the missing docs' media") {

@@ -45,6 +45,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(diff == 0)
     // micro-batches left lineage: multiple stream-<n> run ids
     assert(streamed.select("run_id").distinct().count() >= 2)
+    // each micro-batch's metrics count only its own batch
+    def perRun(df: org.apache.spark.sql.DataFrame, n: org.apache.spark.sql.Column) =
+      df.groupBy("run_id").agg(n).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val metrics = IcebergLite.readAll(spark, Runner.metricsDir(outDir)).get
+    assert(perRun(metrics, sum("docs")) == perRun(streamed, count(lit(1))))
   }
 
   test("watermarked hourly windowed agg: stream (update mode) == batch") {

@@ -321,6 +321,35 @@ class WritersSpec extends AnyFunSuite {
     }
   }
 
+  test("zip-bearing payloads are byte-identical in every JVM time zone") {
+    val rng = new SplittableRandom(7)
+    val paras = Vector.tabulate(3)(_ => TextGen.paragraph(rng, "en", 2))
+    val cells = Vector.tabulate(3)(_ => Vector.tabulate(3)(_ => TextGen.titleLine(rng, "de")))
+    def payloads(): Seq[(String, Array[Byte])] = Seq(
+      "docx" -> DocxWriter.write(DocxWriter.Spec("t", "a", paras, pages = 1)),
+      "xlsx" -> XlsxWriter.write(XlsxWriter.Spec("t", "a", cells)),
+      "pptx" -> PptxWriter.write(PptxWriter.Spec("t", "a", cells)),
+      "odt" -> OdtWriter.write(OdtWriter.Spec("t", "a", paras)),
+      "ods" -> OdsWriter.write(OdsWriter.Spec("t", "a", Vector(cells))),
+      "odp" -> OdpWriter.write(OdpWriter.Spec("t", "a", cells)),
+      "epub" -> EpubWriter.write(EpubWriter.Spec("t", "a", Vector(paras))),
+      "zip" -> ArchiveWriter.writeZip(paras.zipWithIndex.map { case (p, i) =>
+        s"m$i.txt" -> p.getBytes("UTF-8") })
+    ) ++ (0L until 200L).flatMap { i =>
+      Gen.build(Gen.Seed, i).media.map(m => m.media_ref -> m.bytes_b64.getBytes("UTF-8"))
+    }
+    val saved = java.util.TimeZone.getDefault
+    val byZone = try {
+      Seq("America/Los_Angeles", "Asia/Kolkata").map { z =>
+        java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone(z))
+        payloads()
+      }
+    } finally java.util.TimeZone.setDefault(saved)
+    byZone(0).zip(byZone(1)).foreach { case ((name, a), (_, b)) =>
+      assert(java.util.Arrays.equals(a, b), s"$name differs between time zones")
+    }
+  }
+
   test("Gen.build is deterministic and golden offsets are dense") {
     for (i <- 0L until 200L) {
       val a = Gen.build(Gen.Seed, i)
